@@ -1,20 +1,78 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata star schema (TESTDATA.md / FIXTURES.md).
   *
   * Each table is a single parquet file per scale factor. At cluster scale
   * these would be partitioned directories; `spark.read.parquet` handles both
   * shapes identically, so nothing here assumes single-file inputs.
+  *
+  * Schema resolution is paid once per file VERSION, not once per read: a
+  * bare `spark.read.parquet` launches a 1-task schema-inference job every
+  * time it is called, and the ANN/curation queries load the same table
+  * up to seven times per call. A single-file read infers once, caches the
+  * `StructType` under (session, qualified path), and every later read of
+  * the same version is `spark.read.schema(cached).parquet(path)`, which
+  * plans with no Spark job. The version is the file's length and
+  * modification time plus the session's parquet schema-inference confs,
+  * so a file rewritten in place (or a conf flip that changes how a type
+  * reads) infers afresh. Only the schema is reused: the file listing
+  * stays fresh on every read. Directory paths (a partitioned table) keep
+  * the inferring read, since no single status versions their contents.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Confs that change what parquet schema inference yields for a file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** Latest resolved (version, schema) per qualified file path, per
+    * session. Sessions are weak keys ([[Memo]]'s map); the values hold no
+    * session reference, so an unused session's entry is collectable. One
+    * entry per path: a new version replaces the old one. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]]()
+
+  private def schemasFor(spark: SparkSession) = schemas.synchronized {
+    schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap())
+  }
+
+  /** Read `<sfDir>/<name>.parquet`: a single file resolves its schema once
+    * per version (the object note); a directory, or a path that does not
+    * exist, reads exactly as `spark.read.parquet` does. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val status =
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val version = Seq(st.getLen, st.getModificationTime) ++
+          inferenceConfs.map(spark.conf.getOption)
+        val m = schemasFor(spark)
+        val key = fs.makeQualified(p).toString
+        val schema = Option(m.get(key)).filter(_._1 == version)
+          .map(_._2).getOrElse {
+            val inferred = spark.read.parquet(path).schema
+            m.put(key, (version, inferred))
+            inferred
+          }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

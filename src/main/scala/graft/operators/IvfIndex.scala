@@ -64,10 +64,10 @@ object IvfIndex {
   }
 
   def loadCodebook(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebook")
+    spark.read.schema(codebookSchema).parquet(s"$path/codebook")
 
-  /** Assignments schema for explicit-schema versioned reads (the cell
-    * partition column parses from the generation dir names). */
+  /** Assignments schema for explicit-schema reads, versioned and
+    * path-backed (the cell partition column parses from the dir names). */
   val assignmentsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("vec_id", LongType),
@@ -174,7 +174,8 @@ object IvfIndex {
     val cb = loadCodebook(spark, path).localCheckpoint()
     val dropIds = removedIds.select(col("vec_id"))
       .union(upserts.select(col("vec_id"))).distinct().localCheckpoint()
-    val old = spark.read.parquet(s"$path/assignments")
+    val old = spark.read.schema(assignmentsSchema)
+      .parquet(s"$path/assignments")
     val newAssign = VectorOps.assignCells(
       upserts.select(col("vec_id"), col("embedding")), cb).localCheckpoint()
     val affectedCells = IndexMaintenance.distinctVals(
@@ -196,7 +197,15 @@ object IvfIndex {
     * in `PartitionFilters`, never dependent on the dynamic-partition-
     * pruning heuristics (which decline small scans; an earlier in-plan
     * broadcast-join formulation read every partition at fixture scale
-    * for exactly that reason). This is also the 100 TB shape: a
+    * for exactly that reason). The scan is also handed only the probed
+    * cells' existing `cell=<c>` directories (with `basePath` and the
+    * declared [[assignmentsSchema]] — [[probeBatchVersioned]]'s path
+    * selection), so the file index lists ≤nProbe directories on the
+    * driver instead of every cell, which past Spark's
+    * parallel-discovery threshold (32 paths) is a listing JOB per
+    * probe. A probed cell with no directory (no vector assigned to it)
+    * contributes no rows; when none of them has one the scan is an
+    * empty frame. This is also the 100 TB shape: a
     * retrieval tier resolves probe sets against the (tiny, often
     * cached) codebook first, then issues the pruned scan — the literal
     * predicate is what partition metadata services consume. Exact
@@ -220,8 +229,7 @@ object IvfIndex {
       .orderBy(col("csim").desc, col("cell"))
       .limit(nProbe)
       .collect().map(_.getInt(0)).toSeq
-    spark.read.parquet(s"$path/assignments")
-      .filter(col("cell").isin(cells: _*)) // static partition pruning
+    probedCells(spark, path, cells)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         roundVal(graft.functions.VectorExpressions
@@ -248,9 +256,25 @@ object IvfIndex {
   def probeBatch(spark: SparkSession, path: String, queries: DataFrame,
       nProbe: Int, k: Int): DataFrame =
     probeBatchCore(spark, loadCodebook(spark, path),
-      cells => spark.read.parquet(s"$path/assignments")
-        .filter(col("cell").isin(cells: _*)), // static partition pruning
-      queries, nProbe, k)
+      probedCells(spark, path, _), queries, nProbe, k)
+
+  /** The assignments scan of a path-backed index, pruned to `cells`: the
+    * file index is handed only those cells' existing `cell=<c>`
+    * directories ([[probe]]'s note), and the literal `cell IN (…)`
+    * filter keeps the pruning visible as `PartitionFilters`. */
+  private def probedCells(spark: SparkSession, path: String,
+      cells: Seq[Int]): DataFrame = {
+    val base = new org.apache.hadoop.fs.Path(s"$path/assignments")
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = cells.map(c => new org.apache.hadoop.fs.Path(base,
+      IndexMaintenance.partDirName("cell", c))).filter(fs.exists)
+    val scan =
+      if (dirs.isEmpty) spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), assignmentsSchema)
+      else spark.read.option("basePath", base.toString)
+        .schema(assignmentsSchema).parquet(dirs.map(_.toString): _*)
+    scan.filter(col("cell").isin(cells: _*)) // static partition pruning
+  }
 
   /** [[probeBatch]] against the CURRENT snapshot of a [[VersionedTable]]
     * at `root` — the per-micro-batch resolve behind

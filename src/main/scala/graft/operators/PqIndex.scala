@@ -109,7 +109,7 @@ object PqIndex {
     * non-local-cache route — and the meta file must land beside the
     * codes wherever Spark wrote them. */
   private def writeCodesCount(spark: SparkSession, path: String): Unit = {
-    val n = spark.read.parquet(s"$path/codes").count()
+    val n = codes(spark, path).count()
     val meta = metaPath(path)
     val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(meta, true)
@@ -135,8 +135,8 @@ object PqIndex {
       corpus: DataFrame, k: Int = 10,
       shortlistOpt: Option[Int] = None): DataFrame =
     probeBatchCore(spark,
-      VectorOps.codebookMap(spark.read.parquet(s"$path/codebook"), "code"),
-      spark.read.parquet(s"$path/codes"),
+      VectorOps.codebookMap(codebook(spark, path), "code"),
+      codes(spark, path),
       shortlistOpt.getOrElse(defaultShortlist(spark, path)),
       queries, corpus, k)
 
@@ -219,12 +219,12 @@ object PqIndex {
     * under the same frozen codebook. */
   def updateFrom(spark: SparkSession, path: String, upserts: DataFrame,
       removedIds: DataFrame): Unit = {
-    val denseCb = spark.read.parquet(s"$path/codebook").localCheckpoint()
+    val denseCb = codebook(spark, path).localCheckpoint()
     val dropIds = removedIds.select(col("vec_id"))
       .union(upserts.select(col("vec_id"))).distinct().localCheckpoint()
     val affectedBuckets = IndexMaintenance.distinctVals(
       dropIds.select(vbucketCol(col("vec_id")).as("vbucket")), "vbucket")
-    val kept = spark.read.parquet(s"$path/codes")
+    val kept = codes(spark, path)
       .filter(col("vbucket").isin(affectedBuckets: _*))
       .join(broadcast(dropIds), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("codes"), col("vbucket"))
@@ -235,7 +235,7 @@ object PqIndex {
     writeCodesCount(spark, path)
   }
 
-  /** Explicit schemas for versioned reads. */
+  /** Explicit schemas for artifact reads, versioned and path-backed. */
   val codesSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("vec_id", LongType),
@@ -252,6 +252,13 @@ object PqIndex {
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n",
         org.apache.spark.sql.types.LongType)))
+
+  /** A path-backed artifact's tables, read with their declared schemas:
+    * the engine wrote them, so no read pays a schema-inference job. */
+  private def codebook(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(codebookSchema).parquet(s"$path/codebook")
+  private def codes(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(codesSchema).parquet(s"$path/codes")
 
   /** [[build]] into a [[VersionedTable]] at `root`: dense codebook and
     * the stored-codes count ride as extras of the SAME snapshot as the
@@ -379,7 +386,7 @@ object PqIndex {
           finally in.close()
         scala.util.Try(txt.toLong).toOption
       } else None)
-      .getOrElse(spark.read.parquet(s"$path/codes").count())
+      .getOrElse(codes(spark, path).count())
     AnnParams.adcShortlist(n)
   }
 
@@ -399,8 +406,7 @@ object PqIndex {
     // adcSqTable — the positional ordering contract lives there, shared
     // with the in-query q117/q118 paths this probe is spec-pinned
     // equal to); the artifact's dense `code` column is the id
-    val cb = VectorOps.codebookMap(
-      spark.read.parquet(s"$path/codebook"), "code")
+    val cb = VectorOps.codebookMap(codebook(spark, path), "code")
     require(cb.size == M, s"codebook covers ${cb.size} of $M sub-spaces")
     val dsub = qv.length / M
     val dt = VectorOps.adcSqTable(cb, M,
@@ -410,7 +416,7 @@ object PqIndex {
       (acc, s) => acc +
         element_at(element_at(dtLit, s + 1),
           element_at(col("codes"), s + 1) + 1))
-    val ids = spark.read.parquet(s"$path/codes")
+    val ids = codes(spark, path)
       .select(col("vec_id"), roundVal(adc, 4).as("adc"))
       .orderBy(col("adc").asc, col("vec_id"))
       .limit(shortlist)

@@ -1251,7 +1251,9 @@ object VectorOps extends OpCatalog {
     * zero-exchange serving plan. */
   def pqAdcTopK(spark: SparkSession, sfDir: String): DataFrame = {
     GraftSession.tune(spark)
-    annLawFrame(exactL2Scored(spark, sfDir), "l2", asc = true,
+    annLawFrame(
+      exactL2Scored(spark, sfDir, collectQueryVec(emb(spark, sfDir))),
+      "l2", asc = true,
       pqAdcTopKOf(emb(spark, sfDir), spark, memoKey = Some(sfDir)),
       pqRecallFloorHits,
       flagExactL2(emb(spark, sfDir).filter(col("vec_id") =!= 0),
@@ -1266,12 +1268,14 @@ object VectorOps extends OpCatalog {
       .select(col("embedding")).limit(1).collect().headOption
       .map(_.getSeq[Float](0).toArray)
 
-  /** Exact L2-scored corpus vs the vec_id-0 query — `(vec_id, l2)` for
-    * every corpus row, the L2 twin of [[exactCosineScored]]. Malformed
-    * (length-mismatched) rows score null and are dropped — they must
-    * not occupy exact-answer ranks. */
-  private def exactL2Scored(spark: SparkSession, sfDir: String): DataFrame =
-    collectQueryVec(emb(spark, sfDir)) match {
+  /** Exact L2-scored corpus vs the vec_id-0 query `qOpt` (the caller's
+    * [[collectQueryVec]], so a query that already holds it pays no second
+    * collect) — `(vec_id, l2)` for every corpus row, the L2 twin of
+    * [[exactCosineScored]]. Malformed (length-mismatched) rows score null
+    * and are dropped — they must not occupy exact-answer ranks. */
+  private def exactL2Scored(spark: SparkSession, sfDir: String,
+      qOpt: Option[Array[Float]]): DataFrame =
+    qOpt match {
       case None => spark.range(0)
         .selectExpr("id AS vec_id", "CAST(0.0 AS DOUBLE) AS l2")
       case Some(qv) => emb(spark, sfDir).filter(col("vec_id") =!= 0)
@@ -1390,7 +1394,9 @@ object VectorOps extends OpCatalog {
     * pruned-candidate fraction on the core. */
   def ivfAdcTopK(spark: SparkSession, sfDir: String): DataFrame = {
     GraftSession.tune(spark)
-    annLawFrame(exactL2Scored(spark, sfDir), "l2", asc = true,
+    annLawFrame(
+      exactL2Scored(spark, sfDir, collectQueryVec(emb(spark, sfDir))),
+      "l2", asc = true,
       ivfAdcTopKCore(spark, sfDir), ivfadcRecallFloorHits,
       flagExactL2(emb(spark, sfDir).filter(col("vec_id") =!= 0),
         queryVec(spark, sfDir)))
@@ -1837,7 +1843,7 @@ object VectorOps extends OpCatalog {
         PqIndex.probe(spark, dir.toString, qv,
           e.filter(col("vec_id") =!= 0))
     }
-    annLawFrame(exactL2Scored(spark, sfDir), "l2", asc = true,
+    annLawFrame(exactL2Scored(spark, sfDir, qOpt), "l2", asc = true,
       served, pqRecallFloorHits,
       flagExactL2(emb(spark, sfDir).filter(col("vec_id") =!= 0),
         queryVec(spark, sfDir)))

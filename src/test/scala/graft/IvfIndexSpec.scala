@@ -127,6 +127,65 @@ class IvfIndexSpec extends SparkSpec {
     assert(naiveK != k, "corpus-count derivation must diverge at the boundary")
   }
 
+  test("literal-cell probe: == in-query core with or without a probed cell's dir, no listing job while planning") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cells").toString
+    val e = Tables.embeddings(spark, sfDir)
+    val corpus = e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"))
+    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
+    val k = AnnParams.ivfCells(e.count()) // q132's rule
+    val nProbe = AnnParams.ivfProbeCells(k)
+    IvfIndex.build(corpus, dir, nlist = Some(k))
+    val cb = IvfIndex.loadCodebook(spark, dir)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    // every probed cell has a dir: the artifact answers as q45's core
+    assert(pairs(IvfIndex.probe(spark, dir, q, Some(nProbe))) ==
+      pairs(VectorOps.annIvfCore(spark, sfDir)))
+    // planning reads only the probed cells' dirs: with the parallel-
+    // discovery threshold at nProbe, listing every cell dir launches a
+    // listing job (the control) and the probe launches none
+    val cellDirs = new java.io.File(s"$dir/assignments").listFiles()
+      .filter(_.getName.startsWith("cell=")).map(_.toPath)
+    assert(cellDirs.length > nProbe, "the control needs more cells than probes")
+    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getOption(thresholdKey)
+    spark.conf.set(thresholdKey, nProbe.toString)
+    def listings(body: => Any) = JobWatch.jobsDuring(spark)(body)
+      .filter(_.startsWith("Listing leaf files"))
+    try {
+      assert(listings(spark.read.schema(IvfIndex.assignmentsSchema)
+        .parquet(s"$dir/assignments").queryExecution.executedPlan).nonEmpty,
+        "control: a whole-artifact read must list cells in a job")
+      assert(listings(IvfIndex.probe(spark, dir, q, Some(nProbe))
+        .queryExecution.executedPlan).isEmpty,
+        "the probe must list only its probed cells, on the driver")
+    } finally before match {
+      case Some(v) => spark.conf.set(thresholdKey, v)
+      case None => spark.conf.unset(thresholdKey)
+    }
+    // the nearest cell loses its dir (as a cell no vector was assigned
+    // to has none): the probe still answers as the in-query probe over
+    // the same codebook and the corpus without that cell's vectors
+    val top = cb.crossJoin(broadcast(q))
+      .select(col("cell"), graft.functions.VectorExpressions
+        .cosineSimilarity(col("centroid"), col("q_emb")).as("csim"))
+      .orderBy(col("csim").desc, col("cell")).limit(1)
+      .collect().head.getInt(0)
+    val topDir = java.nio.file.Paths.get(dir, "assignments", s"cell=$top")
+    val gone = spark.read.parquet(topDir.toString).select(col("vec_id"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(gone.nonEmpty, "the removed cell must have held vectors")
+    org.apache.commons.io.FileUtils.deleteDirectory(topDir.toFile)
+    val rest = corpus.filter(!col("vec_id").isin(gone: _*))
+    val served = pairs(IvfIndex.probe(spark, dir, q, Some(nProbe)))
+    assert(served == pairs(VectorOps.ivfProbe(rest, q, cb, nProbe)),
+      "a probed cell without a dir must contribute no rows, and nothing else")
+    assert(served.map(_._1).intersect(gone).isEmpty)
+    // no probed cell has a dir: an empty answer, not a failure
+    assert(IvfIndex.probe(spark, dir, q, Some(1)).count() == 0)
+  }
+
   test("q135 probeBatch: served rows are sound, plan is pruned + frontier-limited, batch == per-query probes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
     val e = Tables.embeddings(spark, sfDir)
